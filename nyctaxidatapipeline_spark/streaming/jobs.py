@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyctaxidatapipeline_spark.sources.tables import _nanos_timestamp_cols
+from nyctaxidatapipeline_spark.sources.tables import raw_schema
 
 import os
 
@@ -23,18 +23,16 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str,
                  max_files_per_trigger: int = 1) -> DataFrame:
     """Replay a fixture table as a file stream (schema from the batch
     reader, including the nanos→micros timestamp normalization)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw = raw_schema(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # The file-stream source only accepts directories: stream the sf dir
     # with a glob filter selecting this table's file(s).
     stream = (spark.readStream
               .format("parquet")
-              .schema(raw_schema)
+              .schema(raw.schema)
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
               .option("pathGlobFilter", f"{name}.parquet")
               .load(sf_dir))
-    for c in _nanos_timestamp_cols(path):
+    for c in raw.nanos_cols:
         # TIMESTAMP (not NTZ): watermarks only accept event time on
         # TimestampType; session TZ is pinned UTC so wall times match the
         # batch reader's NTZ values.
